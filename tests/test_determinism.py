@@ -10,12 +10,12 @@ import hashlib
 import numpy as np
 import pytest
 
+from tests.test_golden_fixtures import FIX
 from unmixing_spark.functions.mnf import mnf_rotate
 from unmixing_spark.lsma.endmembers import spectra_at_xy
 from unmixing_spark.lsma.fcls import fcls_abundance
 from unmixing_spark.tiffio import read_tiff
 
-FIX = "/root/reference/unmixing/test"
 
 def _scene_abundances():
     arr, gt, nd = read_tiff(f"{FIX}/LT05_020030_merge_19950712_stack_clip.tiff")

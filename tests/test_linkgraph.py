@@ -8,6 +8,8 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
+import pyarrow.parquet as pq
+import pytest
 
 from tests.conftest import SF_SMALL
 from unmixing_spark.queries import registry
@@ -864,3 +866,14 @@ def test_bowtie_across_graph_sizes(spark, tmp_path):
         assert got == exp, n
         assert (out["pivot_id"] == pivot).all(), n
         assert (out["converged"] == 1).all(), n
+
+
+def test_empty_corpus_raises_named_error(spark, tmp_path):
+    """A 0-row documents table is a ValueError naming the query in the
+    PageRank, TrustRank and HITS loops, not a bare ZeroDivisionError on
+    the page count (q_bowtie's edgeless-graph guard is the model)."""
+    schema = pq.read_schema(f"{SF_SMALL}/documents.parquet")
+    pq.write_table(schema.empty_table(), str(tmp_path / "documents.parquet"))
+    for name in ("q_link_pagerank", "q_trustrank", "q_hits_scores"):
+        with pytest.raises(ValueError, match=name):
+            registry()[name].spark_fn(spark, str(tmp_path))

@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NODATA = -9999.0
+from unmixing_spark.raster import NODATA
 
 
 def _sign_fix(V: np.ndarray) -> np.ndarray:

@@ -11,8 +11,9 @@ process pool and Arrow batches replace pickled chunks:
 - MESMA path (per-pixel endmembers, lsma.py:159-167): endmember tensors
   travel as a co-partitioned ``array<double>`` column next to the spectra —
   never collected, never broadcast.
-- Tile path: grouped per ``tile_id`` via ``applyInPandas``, emitting one
-  abundance cube per tile — the unit the BASELINE throughput metric counts.
+- Tile path: tile rows stream through ``mapInPandas``, one batched FCLS
+  solve per Arrow batch, emitting one abundance cube per tile — the unit
+  the BASELINE throughput metric counts.
 
 Determinism: per-pixel independence ⇒ output invariant to partitioning
 (reference pins this for 1 vs 2 processes, tests.py:62-82; we pin it

@@ -190,8 +190,7 @@ def pagerank_over_documents(spark: SparkSession,
     docs = (docs if docs is not None
             else spark.table("documents")).select("doc_id")
     if seed_mod is None:
-        n_docs = docs.count()   # parquet-footer-only action
-        n_seeds = None
+        n_docs = denom = docs.count()   # parquet-footer-only action
     else:
         # round-6: one doc_id scan yields BOTH totals — the TrustRank
         # path previously paid a separate filter+count job for the
@@ -200,7 +199,13 @@ def pagerank_over_documents(spark: SparkSession,
             F.count("*").alias("n"),
             F.sum((F.col("doc_id") % seed_mod == 0).cast("long"))
             .alias("ns")).collect()[0]
-        n_docs, n_seeds = int(row["n"]), int(row["ns"] or 0)
+        n_docs, denom = int(row["n"]), int(row["ns"] or 0)
+    if denom == 0:
+        name = "q_link_pagerank" if seed_mod is None else "q_trustrank"
+        what = "no pages" if n_docs == 0 else "no trusted seed pages"
+        raise ValueError(
+            f"{name}: documents has {what} — the initial rank vector "
+            "and teleport base divide by that count")
     # loop partitioning sized from the edge count (~2.5 N), see
     # _loop_nparts; links carry their src hash layout into every round
     k = _loop_nparts(spark, 3 * n_docs, row_bytes=24)
@@ -212,12 +217,7 @@ def pagerank_over_documents(spark: SparkSession,
             "FROM links")
             .repartition(k, "src").localCheckpoint(eager=True)
             .repartition(k, "src"))
-    if seed_mod is None:
-        denom = n_docs
-        is_seed = None
-    else:
-        denom = n_seeds
-        is_seed = (F.col("doc_id") % seed_mod == 0)
+    is_seed = None if seed_mod is None else (F.col("doc_id") % seed_mod == 0)
     base = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_SCALE // (PR_DAMP_DEN * denom)
     init = F.lit(PR_SCALE // denom)
     base_col = F.lit(base)
@@ -558,18 +558,6 @@ def _harmonic_oracle() -> str:
     """
 
 
-def _hb_est_col(cnt, s_int):  # type: ignore[no-untyped-def]
-    """Spark Column twin of _hb_est_sql: identical literals, identical
-    branch structure, lc lookup as a when-chain over the 15 tabulated
-    values (exact same doubles as the VALUES relation)."""
-    raw = F.lit(HB_NUM) / s_int.cast("double")
-    lc_e = F
-    for v in range(1, HB_M):
-        lc_e = lc_e.when(cnt == HB_M - v, F.lit(HB_LC_EST[v]))
-    return F.when((raw <= F.lit(HB_LC_CUT)) & (cnt < HB_M),
-                  lc_e).otherwise(raw)
-
-
 def _hb_setup(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     """Checkpointed edge list + initial WIDE register state from the SAME
     SQL templates the oracles render — the shared loop scaffolding of the
@@ -643,6 +631,9 @@ _HB_REGS = [f"r{b}" for b in range(HB_M)]
 # bare decimals would parse as DECIMAL), so results are bit-identical.
 _HB_MERGE_EXPRS = [f"greatest(r{b}, coalesce(c_r{b}, 0)) AS r{b}"
                    for b in range(HB_M)]
+# cnt: present registers have rho >= 1, so r_b > 0 <=> register occupied;
+# s_int: absent registers (rho = 0) contribute 2^(W+1) through the same
+# uniform shift as present ones
 _HB_CNT_EXPR = " + ".join(
     f"(CASE WHEN r{b} > 0 THEN 1 ELSE 0 END)"
     for b in range(HB_M)) + " AS cnt"
@@ -652,8 +643,9 @@ _HB_SINT_EXPR = " + ".join(
 
 
 def _hb_est_expr() -> str:
-    """selectExpr twin of _hb_est_col over (cnt, s_int) columns: same
-    literals, same branch order (lc chain cnt = 15 .. 1)."""
+    """selectExpr twin of _hb_est_sql over (cnt, s_int) columns: same
+    literals, with the lc lookup as a CASE chain (cnt = 15 .. 1) over the
+    exact doubles of the VALUES relation."""
     raw = f"{D.dbl(HB_NUM)} / cast(s_int as double)"
     chain = " ".join(f"WHEN cnt = {HB_M - v} THEN {D.dbl(HB_LC_EST[v])}"
                      for v in range(1, HB_M))
@@ -708,26 +700,6 @@ def _loop_nparts(spark: SparkSession, n_rows: int,
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return max(2, min(cap, (n_rows * row_bytes + (64 << 20) - 1)
                       >> 26))
-
-
-def _hb_cnt_col():
-    """Occupied-register count over the wide row: present registers have
-    rho >= 1 (the bit-length lookup never yields 0 for a present hash),
-    so r_b > 0 <=> the (node, b) row existed in the long form."""
-    out = None
-    for b in range(HB_M):
-        t = F.when(F.col(f"r{b}") > 0, 1).otherwise(0)
-        out = t if out is None else out + t
-    return out
-
-
-def _hb_sint_col():
-    """Exact-integer register sum over the wide row: sum of 2^(W+1-rho)
-    with absent registers (rho=0) contributing 2^(W+1) — the same
-    uniform shift expression for both cases."""
-    return F.expr(" + ".join(
-        f"shiftleft(cast(1 as bigint), {HB_W + 1} - r{b})"
-        for b in range(HB_M)))
 
 
 def _hb_propagate_wide(links: DataFrame, state: DataFrame,
@@ -794,11 +766,11 @@ def _hb_conv_col(state: DataFrame, prev_state: DataFrame):
     """The exact convergence proof over wide states: total occupied
     registers and total rho equal <=> register states equal (monotone
     growth), identical to the long-form reg_stats comparison."""
+    cnt = F.expr(_HB_CNT_EXPR)
     rho_sum = F.expr(" + ".join(f"r{b}" for b in range(HB_M)))
 
     def reg_stats(st: DataFrame, c: str, sr: str) -> DataFrame:
-        return st.agg(F.sum(_hb_cnt_col()).alias(c),
-                      F.sum(rho_sum).alias(sr))
+        return st.agg(F.sum(cnt).alias(c), F.sum(rho_sum).alias(sr))
 
     return (reg_stats(state, "c", "sr")
             .crossJoin(reg_stats(prev_state, "c2", "sr2"))
@@ -814,10 +786,10 @@ def harmonic_over_documents(spark: SparkSession) -> DataFrame:
     construction). Round-6 shape: each round is one src-keyed join + ONE
     node-keyed register-max aggregation over wide rows, with the
     harmonic accumulator riding in the same row (no per-round hc join);
-    estimator doubles evaluate the identical _hb_est_col expression
-    tree, so results are bit-identical to the row-form loop. Lineage
-    truncates every HB_CKPT_EVERY rounds plus the last two rounds (the
-    convergence proof reads both)."""
+    estimator doubles evaluate _HB_EST_EXPR, the selectExpr twin of the
+    oracle's _hb_est_sql, so results are bit-identical to the row-form
+    loop. Lineage truncates every HB_CKPT_EVERY rounds plus the last two
+    rounds (the convergence proof reads both)."""
     links, state, k = _hb_setup(spark)
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     state = _hb_init_acc(state, [f"{D.dbl(0.0)} AS h", "e AS prev"])
@@ -837,8 +809,7 @@ def harmonic_over_documents(spark: SparkSession) -> DataFrame:
                 state = (state.localCheckpoint(eager=True)
                          .repartition(k, "node"))
     conv = _hb_conv_col(state, prev_state)
-    stats = state.select("node", "h", _hb_cnt_col().alias("cnt"),
-                         _hb_sint_col().alias("s_int"))
+    stats = state.selectExpr("node", "h", _HB_CNT_EXPR, _HB_SINT_EXPR)
     return (stats
             .crossJoin(F.broadcast(conv))
             .select(F.col("node").alias("doc_id"),
@@ -975,6 +946,10 @@ def hits_over_documents(spark: SparkSession,
     docs = (docs if docs is not None
             else spark.table("documents")).select("doc_id")
     n = docs.count()
+    if n == 0:
+        raise ValueError(
+            "q_hits_scores: documents has no pages — the initial hub "
+            "vector divides HS_SCALE by the page count")
     h = docs.select(
         "doc_id", F.lit(HS_SCALE // n).cast("bigint").alias("h"))
     # Round-6 loop shape (guide §2.3 "shuffle fewer bytes" + §1.2): the
@@ -1075,7 +1050,7 @@ register("q_hits_scores", QuerySpec(
 # report for the web graph). NF(r) = sum over nodes v of |B_r(v)|; the
 # effective diameter is the smallest r with NF(r) >= 0.9 * NF(r_max).
 # Reuses the HyperBall machinery above verbatim (_hb_base_ctes /
-# _hb_agg_sql / _hb_est_sql / _hb_est_col): per node the ball estimate is
+# _hb_agg_sql / _hb_est_sql / _HB_EST_EXPR): per node the ball estimate is
 # forced monotone via the same clamped-increment envelope the harmonic
 # accumulator uses (env += max(0, e_r - e_{r-1}) — HyperANF's standard
 # monotonization), and NF(r) is the per-round global sum of envelopes.

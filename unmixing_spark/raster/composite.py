@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 
-NODATA = -9999.0
+from unmixing_spark.raster import NODATA
 
 
 def _as_stack(rasters, band):

@@ -9,23 +9,24 @@ materialized transiently inside kernels that need spatial structure
 occupancy the dense form is 1000x larger and its Arrow serialization
 dominated the whole pipeline (measured: 118s of a 160s run at 23k tiles).
 
-Grouping is sort-based inside mapInPandas (one Python call per Arrow
-batch) rather than applyInPandas (one call per tile): at millions of
-small tiles the per-group overhead dominates otherwise.
+Tile assembly is pure regrouping, so it stays inside the engine: one
+``groupBy(tile_id)`` aggregate builds each row, and Python is entered only
+where the NumPy kernels run on the tiles.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unmixing_spark import dialect as D
 from unmixing_spark.raster import NODATA
 from unmixing_spark.spatial.grid import GridSpec, WORLD_GRID
 
-# sparse tile: idx = local row*tile+col of occupied pixels (sorted);
-# bands = band-major values for those pixels, len = p * len(idx)
+# the sparse tile row assemble_tiles emits: idx = local row*tile+col of
+# occupied pixels (ascending); bands = band-major values for those pixels,
+# len = p * len(idx); x0/y0 as in GridSpec.geotransform
 TILE_SCHEMA = (
     "tile_id long, x0 double, y0 double, dx double, dy double, "
     "p int, m int, n int, idx array<int>, bands array<double>"
@@ -45,94 +46,29 @@ def tile_to_dense(row) -> np.ndarray:
 
 def assemble_tiles(cells: DataFrame, band_cols: list[str],
                    grid: GridSpec = WORLD_GRID) -> DataFrame:
-    """cells (cell_id, tile_id, b1..bp) → sparse tile rows."""
-    p = len(band_cols)
-    tile = grid.tile
-    nxc, ntx, deg = grid.nx, grid.ntx, grid.deg
-
-    def _assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        tids = pdf["tile_id"].to_numpy()
-        order = np.argsort(tids, kind="stable")
-        tids = tids[order]
-        cells_np = pdf["cell_id"].to_numpy()[order]
-        bands_np = np.stack([pdf[bc].to_numpy(dtype=np.float64)[order]
-                             for bc in band_cols])
-        uniq = np.unique(tids)
-        bounds = np.searchsorted(tids, uniq)
-        rows = {k: [] for k in ("tile_id", "x0", "y0", "dx", "dy",
-                                "p", "m", "n", "idx", "bands")}
-        for gi, tid in enumerate(uniq):
-            lo = bounds[gi]
-            hi = bounds[gi + 1] if gi + 1 < len(uniq) else len(tids)
-            iy = cells_np[lo:hi] // nxc
-            ix = cells_np[lo:hi] % nxc
-            lidx = (iy % tile) * tile + (ix % tile)
-            o = np.argsort(lidx)
-            ty, tx = divmod(int(tid), ntx)
-            rows["tile_id"].append(int(tid))
-            rows["x0"].append(-180.0 + tx * tile * deg)
-            rows["y0"].append(90.0 - ty * tile * deg)
-            rows["dx"].append(deg)
-            rows["dy"].append(-deg)
-            rows["p"].append(p)
-            rows["m"].append(tile)
-            rows["n"].append(tile)
-            rows["idx"].append(lidx[o].astype(np.int32))
-            rows["bands"].append(bands_np[:, lo:hi][:, o].ravel())
-        return pd.DataFrame(rows)
-
-    def _build_batch(it):
-        # carry the trailing tile group across batch boundaries
-        carry = None
-        for pdf in it:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            tids = pdf["tile_id"].to_numpy()
-            keep = tids != tids[-1]
-            carry = pdf[~keep]
-            pdf = pdf[keep]
-            if len(pdf):
-                yield _assemble(pdf)
-        if carry is not None and len(carry):
-            yield _assemble(carry)
-
-    return (cells.repartition(F.col("tile_id"))
-            .sortWithinPartitions("tile_id", "cell_id")
-            .mapInPandas(_build_batch, TILE_SCHEMA))
-
-
-def explode_tiles(tiles: DataFrame, band_names: list[str],
-                  grid: GridSpec = WORLD_GRID) -> DataFrame:
-    """Inverse pivot: tile rows → one row per occupied pixel
-    (cell_id, b1..bp) — the relational ravel_and_filter (lsma.py:769-796)."""
-    p = len(band_names)
-    tile = grid.tile
-    nxc, ntx = grid.nx, grid.ntx
-    schema = "cell_id long, " + ", ".join(f"{b} double" for b in band_names)
-
-    def _unravel(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            out_cells, out_bands = [], []
-            for tile_id, ridx, rbands in zip(pdf["tile_id"], pdf["idx"],
-                                             pdf["bands"]):
-                idx = np.asarray(ridx, dtype=np.int64)
-                vals = np.asarray(rbands, dtype=np.float64).reshape(p, len(idx))
-                keep = vals[0] != NODATA                 # band-0 filter rule
-                idx, vals = idx[keep], vals[:, keep]
-                ty, tx = divmod(int(tile_id), ntx)
-                r, c = idx // tile, idx % tile
-                out_cells.append((ty * tile + r) * nxc + (tx * tile + c))
-                out_bands.append(vals)
-            cells_all = np.concatenate(out_cells)
-            bands_all = np.concatenate(out_bands, axis=1)
-            out = {"cell_id": cells_all}
-            for bi, b in enumerate(band_names):
-                out[b] = bands_all[bi]
-            yield pd.DataFrame(out)
-
-    return tiles.mapInPandas(_unravel, schema)
+    """cells (cell_id, tile_id, b1..bp) → sparse tile rows: one
+    ``groupBy(tile_id)`` collecting (local idx, b1..bp) structs, sorted by
+    local idx, then reshaped band-major. A null band value becomes NaN."""
+    tile, nxc, ntx, deg = grid.tile, grid.nx, grid.ntx, grid.deg
+    local = (f"cast(((cell_id div {nxc}) % {tile}) * {tile} "
+             f"+ (cell_id % {nxc}) % {tile} as int)")
+    pix = F.struct(F.expr(local).alias("i"), *[
+        F.coalesce(F.col(b).cast("double"), F.lit(float("nan")))
+        .alias(f"v{k}") for k, b in enumerate(band_cols)])
+    bands = ", ".join(f"transform(px, x -> x.v{k})"
+                      for k in range(len(band_cols)))
+    return (cells.groupBy("tile_id")
+            .agg(F.array_sort(F.collect_list(pix)).alias("px"))
+            .selectExpr(
+                "cast(tile_id as bigint) AS tile_id",
+                f"{D.dbl(-180.0)} + (tile_id % {ntx}) * {tile} "
+                f"* {D.dbl(deg)} AS x0",
+                f"{D.dbl(90.0)} - (tile_id div {ntx}) * {tile} "
+                f"* {D.dbl(deg)} AS y0",
+                f"{D.dbl(deg)} AS dx",
+                f"{D.dbl(-deg)} AS dy",
+                f"{len(band_cols)} AS p",
+                f"{tile} AS m",
+                f"{tile} AS n",
+                "transform(px, x -> x.i) AS idx",
+                f"flatten(array({bands})) AS bands"))
